@@ -321,6 +321,23 @@ def _membw_sec(spark) -> tuple[float, list[float]]:
     return min(times), times
 
 
+def _amplify_factor(raw: str | None) -> int:
+    """The amplified tier's factor from SPARK_GRAFT_BENCH_AMPLIFY's
+    value: 4 when unset, 0 (tier off) when empty. A malformed value
+    warns on stderr and falls back to 4 instead of raising after the
+    whole base tier has been timed."""
+    if raw is None:
+        return 4
+    try:
+        return int(raw or "0")
+    except ValueError:
+        print(
+            f"bench.py: SPARK_GRAFT_BENCH_AMPLIFY={raw!r} is not an integer; using 4",
+            file=sys.stderr,
+        )
+        return 4
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
@@ -464,7 +481,7 @@ def main() -> None:
     # per-query rows are untouched; the amplified rows land in
     # `queries` as `<name>_x<k>`. SPARK_GRAFT_BENCH_AMPLIFY overrides
     # the factor (default 4; 0/1 disables); subset runs skip the tier.
-    amp_k = int(os.environ.get("SPARK_GRAFT_BENCH_AMPLIFY", "4") or "0")
+    amp_k = _amplify_factor(os.environ.get("SPARK_GRAFT_BENCH_AMPLIFY"))
     if amp_k >= 2 and not only.strip():
         import shutil
         import tempfile

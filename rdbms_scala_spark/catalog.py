@@ -42,6 +42,32 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def table_fingerprint(sf_dir: str, name: str) -> str:
+    """Cheap driver-side modification fingerprint of a parquet table:
+    (path, size, mtime_ns) of every data file under it, hashed. Lets
+    the session-relation cache (``session.session_relation``) detect
+    an overwritten table (e.g. re-amplifying into the same /tmp tier
+    dir) without reading any data."""
+    import hashlib
+
+    root = table_path(sf_dir, name)
+    parts: list[str] = []
+    if os.path.isdir(root):
+        for dirpath, _dirs, files in os.walk(root):
+            for f in sorted(files):
+                p = os.path.join(dirpath, f)
+                st = os.stat(p)
+                parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
+    elif os.path.exists(root):
+        st = os.stat(root)
+        parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
+    # os.walk's directory order is filesystem-dependent; sort the full
+    # entry list so an identical on-disk table always fingerprints the
+    # same (an order-sensitive hash caused spurious cache invalidation).
+    parts.sort()
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
+
+
 #: Memoized DataFrames: rebuilding the same scan re-reads Parquet
 #: footers and re-crosses the Py4J boundary (~100ms/table — dominates
 #: multi-table query build time). DataFrames are immutable plans, so

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window as W
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 # ---------------------------------------------------------------------------
 # shared building blocks
@@ -380,36 +381,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIR_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = {}
-_SHINGLE_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = {}
-
-
-def _table_fingerprint(sf_dir: str, name: str) -> str:
-    """Cheap driver-side modification fingerprint of a parquet table:
-    (path, size, mtime_ns) of every data file under it, hashed. Lets
-    the pair cache detect an overwritten table (e.g. re-amplifying
-    into the same /tmp tier dir) without reading any data."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, f"{name}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(root):
-        for dirpath, _dirs, files in os.walk(root):
-            for f in sorted(files):
-                p = os.path.join(dirpath, f)
-                st = os.stat(p)
-                parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
-    # os.walk's directory order is filesystem-dependent; sort the full
-    # entry list so an identical on-disk table always fingerprints the
-    # same (an order-sensitive hash caused spurious cache invalidation).
-    parts.sort()
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()
-
-
 def cached_jaccard_pairs(
     spark: SparkSession, sf_dir: str, max_df: int = MAX_SHINGLE_DF
 ) -> DataFrame:
@@ -423,35 +394,20 @@ def cached_jaccard_pairs(
     once per query. At 100 TB the same role is played by a persisted
     pairs table refreshed with the corpus (every serious dedup
     pipeline materializes its candidate-pair relation; this cache is
-    the single-session form of that discipline).
+    the single-session form of that discipline). Cached by
+    ``session.session_relation`` on the documents table."""
 
-    Staleness contract: an entry is valid only while the documents
-    table's file fingerprint (sizes + mtimes, `_table_fingerprint`)
-    is unchanged — overwriting the table under the same path (e.g.
-    re-amplifying into the same /tmp tier dir) invalidates and
-    rebuilds the entry rather than serving stale pairs. Superseded
-    entries are dropped from the dict and best-effort unpersisted;
-    final block reclamation is Spark's ContextCleaner once the
-    driver-side reference is gone."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), max_df)
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _PAIR_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    df = (
-        pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df)
-        .filter(F.col("jaccard") >= 0.7)
-        .localCheckpoint(eager=True)
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return (
+            pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df)
+            .filter(F.col("jaccard") >= 0.7)
+            .localCheckpoint(eager=True)
+        )
+
+    return session_relation(
+        spark, sf_dir, "documents", f"jaccard_pairs:{max_df}", build
     )
-    _PAIR_CACHE[key] = (fp, df)
-    return df
 
 
 def cached_doc_shingles(
@@ -462,24 +418,17 @@ def cached_doc_shingles(
     shared input for iterative consumers that scan it several times
     per call (``sample_coverage_greedy`` reads it ~2k times for k
     greedy rounds; without the checkpoint every round replays the
-    tokenize + explode + distinct). Same staleness contract as
-    ``cached_jaccard_pairs``: entries are keyed on the documents
-    table's file fingerprint and rebuilt when it changes."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), n)
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SHINGLE_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    df = shingles_df(docs, n=n, distinct=True).localCheckpoint(eager=True)
-    _SHINGLE_CACHE[key] = (fp, df)
-    return df
+    tokenize + explode + distinct). Cached by
+    ``session.session_relation`` on the documents table."""
+    return session_relation(
+        spark,
+        sf_dir,
+        "documents",
+        f"doc_shingles:{n}",
+        lambda: shingles_df(
+            load_table(spark, sf_dir, "documents"), n=n, distinct=True
+        ).localCheckpoint(eager=True),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -550,9 +499,6 @@ def minhash_band_buckets(
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("band_hash"))
 
 
-_MINHASH_CACHE: dict[tuple[str, str], tuple[str, DataFrame, DataFrame]] = {}
-
-
 def cached_minhash_sig_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -564,40 +510,30 @@ def cached_minhash_sig_cand(
     (num_perm/4 md5 calls per shingle instance) and the banded
     exchange dominate each of those queries, and the session suite
     was paying them once per query (the `cached_jaccard_pairs`
-    waste, round 7, replayed on the MinHash tier). Same staleness
-    contract: entries key on the documents table's file fingerprint
-    and superseded checkpoints are dropped + best-effort unpersisted.
-    At 100 TB the persisted analog is the signature/candidate tables
-    every production dedup job materializes next to the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _MINHASH_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-    if hit is not None:
-        for df in hit[1:]:
-            try:
-                df._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass  # ContextCleaner reclaims once the dict ref is gone
-        del _MINHASH_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(shingles_df(docs, n=3, distinct=False)).localCheckpoint(
-        eager=True
-    )
-    cand = (
-        expand_bucket_pairs(
-            minhash_band_buckets(sig),
-            keys=["band", "band_hash"],
-            payload=["doc_id"],
-            keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
+    waste, round 7, replayed on the MinHash tier). Cached by
+    ``session.session_relation`` on the documents table. At 100 TB
+    the persisted analog is the signature/candidate tables every
+    production dedup job materializes next to the corpus."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        sig = minhash_signatures(
+            shingles_df(docs, n=3, distinct=False)
+        ).localCheckpoint(eager=True)
+        cand = (
+            expand_bucket_pairs(
+                minhash_band_buckets(sig),
+                keys=["band", "band_hash"],
+                payload=["doc_id"],
+                keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
+            )
+            .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    _MINHASH_CACHE[key] = (fp, sig, cand)
-    return sig, cand
+        return sig, cand
+
+    return session_relation(spark, sf_dir, "documents", "minhash_sig_cand", build)
 
 
 def _minhash_oracle() -> str:
@@ -808,9 +744,6 @@ def _simhash_oracle() -> str:
     """
 
 
-_SIMHASH_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL SimHash candidate pair relation — every distinct pair
     the two-level banding ladder surfaces, with its exact Hamming
@@ -819,10 +752,11 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles the whole relation (accepted and rejected bands) for
     threshold tuning. Shared so the production pair set and its
     tuning readouts can never drift apart — and materialized ONCE per
-    (session, sf_dir) behind an eager localCheckpoint with the
-    ``cached_jaccard_pairs`` staleness contract, so the three simhash
-    queries pay the fingerprint + banding derivation once per session
-    (the ``cached_minhash_sig_cand`` discipline applied to this tier).
+    (session, sf_dir) behind an eager localCheckpoint, cached by
+    ``session.session_relation`` on the documents table, so the three
+    simhash queries pay the fingerprint + banding derivation once per
+    session (the ``cached_minhash_sig_cand`` discipline applied to
+    this tier).
 
     Per doc: 64-bit fingerprint = sign-aggregate of shingle-hash bits
     (trigram shingles, not bare tokens — the corpus vocabulary is
@@ -842,17 +776,18 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding comment below); exact Hamming check via bit_count(xor)
     summed over halves. Everything is built-in exprs — no Python in
     the hot path."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    table_fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SIMHASH_CACHE.get(cache_key)
-    if hit is not None and hit[0] == table_fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SIMHASH_CACHE[cache_key]
+    return session_relation(
+        spark,
+        sf_dir,
+        "documents",
+        "simhash_candidates",
+        lambda: _simhash_candidate_build(spark, sf_dir),
+    )
+
+
+def _simhash_candidate_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The uncached, checkpointed derivation behind
+    ``simhash_candidate_pairs``."""
     docs = load_table(spark, sf_dir, "documents")
     tok = shingles_df(docs, n=3, distinct=True).withColumnRenamed("shingle", "tok")
     tok = tok.withColumn("h0", F.md5(F.concat(F.lit("0:"), F.col("tok")))).withColumn(
@@ -962,7 +897,7 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out = (
+    return (
         cand.withColumn(
             "hamming",
             F.bit_count(F.expr("fla ^ flb")) + F.bit_count(F.expr("fha ^ fhb")),
@@ -970,8 +905,6 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
         .localCheckpoint(eager=True)
     )
-    _SIMHASH_CACHE[cache_key] = (table_fp, out)
-    return out
 
 
 @register(
@@ -2470,9 +2403,6 @@ def substring_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", tokens().alias("t"))
 
 
-_SUBSTR_COUNTS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def _substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, h): every document's positioned k-token anchor-run
     hashes — one md5 per offset via a map-only ``transform`` (no
@@ -2494,7 +2424,7 @@ def _substring_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(h, n): the repeated anchor-hash relation (corpus-wide
     occurrence count >= 2) — the dup-hash table of the
     exact-substring tier, session-materialized ONCE (localCheckpoint,
-    `cached_jaccard_pairs` staleness contract) because THREE readers
+    cached by ``session.session_relation``) because THREE readers
     ride it: the df-cap hot probe, the span semi-join, and the
     removal-stats call's second spans derivation. Without the cache
     each reader re-pays the full tokenize+md5 pass over the corpus
@@ -2503,26 +2433,17 @@ def _substring_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dup-hash table (it is the removal list's index). Size is
     distinct-REPEATED-hashes only (far below token volume); at 100 TB
     this is the relation you would scratch-parquet instead."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    table_fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SUBSTR_COUNTS_CACHE.get(cache_key)
-    if hit is not None and hit[0] == table_fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SUBSTR_COUNTS_CACHE[cache_key]
-    counts = (
-        _substring_runs(spark, sf_dir)
+    return session_relation(
+        spark,
+        sf_dir,
+        "documents",
+        "substring_dup_counts",
+        lambda: _substring_runs(spark, sf_dir)
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _SUBSTR_COUNTS_CACHE[cache_key] = (table_fp, counts)
-    return counts
 
 
 def substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2963,9 +2884,6 @@ _WINNOW_ORACLE = f"""
 """
 
 
-_WINNOW_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """The winnowing SELECTION (Schleimer/Wilkerson/Aiken): hash every
     k-token gram, then for EVERY window of w consecutive gram
@@ -3027,32 +2945,22 @@ def cached_winnow_raw(
     fingerprint store a production corpus keeps next to the data:
     gram hashing + the per-window min dominate the tier's cost, and
     every consumer (pair join, tier report, incremental probe)
-    derives from this one relation with its own df-cap stance. Same
-    staleness contract as the pair cache (documents file
-    fingerprint). ``checkpoint=False`` returns the raw lineage
-    without materializing or caching — the plan-pin tests inspect
-    the derivation through it."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp_tag = _table_fingerprint(sf_dir, "documents")
-    if checkpoint:  # raw-lineage callers must not see the cache
-        hit = _WINNOW_CACHE.get(key)
-        if hit is not None and hit[0] == fp_tag:
-            return hit[1]
-        if hit is not None:
-            try:
-                hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass
-            del _WINNOW_CACHE[key]
-    fp0 = winnow_fingerprints(load_table(spark, sf_dir, "documents"))
-    if not checkpoint:
-        return fp0
-    fp0 = fp0.localCheckpoint(eager=True)
-    _WINNOW_CACHE[key] = (fp_tag, fp0)
-    return fp0
-
-
-_WINNOW_CAPPED_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
+    derives from this one relation with its own df-cap stance. Cached
+    by ``session.session_relation`` on the documents table.
+    ``checkpoint=False`` returns the raw lineage without materializing
+    or caching — the plan-pin tests inspect the derivation through
+    it."""
+    if not checkpoint:  # raw-lineage callers must not see the cache
+        return winnow_fingerprints(load_table(spark, sf_dir, "documents"))
+    return session_relation(
+        spark,
+        sf_dir,
+        "documents",
+        "winnow_raw",
+        lambda: winnow_fingerprints(
+            load_table(spark, sf_dir, "documents")
+        ).localCheckpoint(eager=True),
+    )
 
 
 def cached_winnow_fingerprints(
@@ -3065,27 +2973,23 @@ def cached_winnow_fingerprints(
     dedup_tier_report both sit on the capped relation in their timed
     hot path, so it is checkpointed once rather than re-derived per
     call (measured 1.7 s -> 5.4 s at the x64 smoke tier without this
-    second checkpoint). Same staleness contract as every session
-    cache (documents file fingerprint)."""
-    fp0 = cached_winnow_raw(spark, sf_dir, checkpoint=checkpoint)
-    fdf = fp0.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    fp = fp0.join(fdf.filter(F.col("df") <= _WIN_MAX_DF).select("h"), "h")
+    second checkpoint). Cached by ``session.session_relation`` on the
+    documents table; ``checkpoint=False`` as in ``cached_winnow_raw``."""
+
+    def capped() -> DataFrame:
+        fp0 = cached_winnow_raw(spark, sf_dir, checkpoint=checkpoint)
+        fdf = fp0.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        return fp0.join(fdf.filter(F.col("df") <= _WIN_MAX_DF).select("h"), "h")
+
     if not checkpoint:
-        return fp
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp_tag = _table_fingerprint(sf_dir, "documents")
-    hit = _WINNOW_CAPPED_CACHE.get(key)
-    if hit is not None and hit[0] == fp_tag:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass
-        del _WINNOW_CAPPED_CACHE[key]
-    fp = fp.localCheckpoint(eager=True)
-    _WINNOW_CAPPED_CACHE[key] = (fp_tag, fp)
-    return fp
+        return capped()
+    return session_relation(
+        spark,
+        sf_dir,
+        "documents",
+        "winnow_capped",
+        lambda: capped().localCheckpoint(eager=True),
+    )
 
 
 @register(

@@ -247,9 +247,9 @@ _ROTATE_LEAD: frozenset[str] = frozenset({
     "dedup_semdedup", "streaming_throughput_progress",
 })
 
-# Tier 1: the staleness-7 block (last externally checked r08). 12
-# rows; tier 0 (22) + tier 1 (12) = 34, well inside the ~50-row
-# prefix, leaving ~16 slots of tier-2 regression coverage.
+# Tier 1: the staleness-7 block (last externally checked r08). 11
+# rows; tier 0 (22) + tier 1 (11) = 33, well inside the ~50-row
+# prefix, leaving ~17 slots of tier-2 regression coverage.
 _ROTATE_STALE: frozenset[str] = frozenset({
     "events_session_paths", "graph_triangle_count",
     "join_asof_tolerance", "maintenance_skew_report",

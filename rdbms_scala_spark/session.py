@@ -17,8 +17,11 @@ are made for a large cluster and merely *sized down* for local mode:
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from rdbms_scala_spark.catalog import table_fingerprint
 
 
 def _cpus() -> str:
@@ -123,13 +126,65 @@ def session_clone(spark: SparkSession, tag: str, confs: dict[str, str]) -> Spark
     return s2
 
 
+#: The one session-relation registry: (applicationId, sf_dir, tag) ->
+#: (table fingerprint, value). Every session-materialized relation
+#: lives here (see ``session_relation``), so eviction cannot miss one.
+_SESSION_RELATIONS: dict[tuple[str, str, str], tuple[str, Any]] = {}
+
+T = TypeVar("T")
+
+
+def _release(value: Any) -> None:
+    """Best-effort unpersist of every DataFrame in a registry value (a
+    DataFrame, or a tuple holding some). Each is a ``localCheckpoint``
+    result: its analyzed plan is a LogicalRDD over the checkpointed
+    RDD, whose blocks ``spark.catalog.clearCache()`` does NOT free.
+    (``queryExecution().toRdd()`` is a fresh map over that RDD, so
+    unpersisting it would free nothing.)"""
+    for item in value if isinstance(value, tuple) else (value,):
+        if isinstance(item, DataFrame):
+            try:
+                item._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            except Exception:
+                pass  # not a checkpoint: ContextCleaner reclaims it
+
+
+def session_relation(
+    spark: SparkSession, sf_dir: str, table: str, tag: str, build: Callable[[], T]
+) -> T:
+    """The value ``build()`` returns, materialized ONCE per
+    (application, sf_dir, tag) and reused while ``table`` is unchanged.
+
+    The session form of a persisted derived table: ``build`` pays an
+    expensive derivation behind its own eager ``localCheckpoint`` calls,
+    and every later caller in the session gets the SAME object back.
+    ``tag`` names the relation and any parameter it depends on (e.g.
+    ``"jaccard_pairs:1000"``).
+
+    Staleness contract: an entry is valid only while ``table``'s file
+    fingerprint (``catalog.table_fingerprint``: sizes + mtimes) is
+    unchanged. Overwriting the table under the same path invalidates
+    the entry: every DataFrame in the superseded value is best-effort
+    unpersisted, then ``build`` runs again. ``evict_session_relations``
+    drops every entry the same way."""
+    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), tag)
+    fp = table_fingerprint(sf_dir, table)
+    hit = _SESSION_RELATIONS.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    if hit is not None:
+        del _SESSION_RELATIONS[key]
+        _release(hit[1])
+    value = build()
+    _SESSION_RELATIONS[key] = (fp, value)
+    return value
+
+
 def evict_session_relations(spark: SparkSession) -> None:
-    """Drop every session-materialized relation: the module-level
-    localCheckpoint registries (jaccard pairs, doc shingles, minhash
-    sig/cand, winnowing raw + capped, phash bands) plus anything in
-    the SQL cache manager. The registries hold RDD checkpoint blocks
-    that ``spark.catalog.clearCache()`` does NOT free, so each entry
-    is unpersisted explicitly before the dict is cleared.
+    """Drop every session-materialized relation: each entry of the
+    ``session_relation`` registry (unpersisted explicitly, as its
+    checkpoint blocks outlive ``spark.catalog.clearCache()``) plus
+    anything in the SQL cache manager.
 
     Used by bench.py between family blocks: round-over-round bench
     comparisons showed rows timed late in a long session running
@@ -139,36 +194,9 @@ def evict_session_relations(spark: SparkSession) -> None:
     warm pass rebuild only what IT needs. Production jobs sharing a
     long-lived session can call this at pipeline-stage boundaries for
     the same reason."""
-    from pyspark.sql import DataFrame
-
-    from rdbms_scala_spark.pipeline import chunking, dedup, multimodal, text
-    from rdbms_scala_spark.queries import behavior
-
-    registries = (
-        chunking._CDC_CACHE,
-        chunking._V0_FLAGS_CACHE,
-        dedup._PAIR_CACHE,
-        dedup._SHINGLE_CACHE,
-        dedup._MINHASH_CACHE,
-        dedup._WINNOW_CACHE,
-        dedup._WINNOW_CAPPED_CACHE,
-        dedup._SIMHASH_CACHE,
-        dedup._SUBSTR_COUNTS_CACHE,
-        multimodal._PHASH_CACHE,
-        text._BPE_CACHE,
-        text._NB_CACHE,
-        behavior._COPURCHASE_CACHE,
-    )
-    for reg in registries:
-        for val in reg.values():
-            items = val if isinstance(val, tuple) else (val,)
-            for item in items:
-                if isinstance(item, DataFrame):
-                    try:
-                        item._jdf.queryExecution().toRdd().unpersist(False)
-                    except Exception:
-                        pass  # ContextCleaner reclaims via the dict clear
-        reg.clear()
+    for _fp, value in _SESSION_RELATIONS.values():
+        _release(value)
+    _SESSION_RELATIONS.clear()
     spark.catalog.clearCache()
     # Unpersisting and clearing only drops the REFERENCES; the JVM
     # blocks (checkpoint RDDs, and crucially per-query BROADCAST

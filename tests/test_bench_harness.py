@@ -61,3 +61,17 @@ def test_subset_run_does_not_clobber_full_passes_artifact():
     finally:
         if os.path.exists(SUBSET):
             os.remove(SUBSET)
+
+
+def test_amplify_factor_parse(capsys):
+    """SPARK_GRAFT_BENCH_AMPLIFY parsing: unset -> 4, empty -> 0 (tier
+    off), an integer as given, and a malformed value warns on stderr
+    and falls back to 4 instead of raising after the base tier ran."""
+    from bench import _amplify_factor
+
+    assert _amplify_factor(None) == 4
+    assert _amplify_factor("") == 0
+    assert _amplify_factor("16") == 16
+    assert capsys.readouterr().err == ""
+    assert _amplify_factor("x4") == 4
+    assert "SPARK_GRAFT_BENCH_AMPLIFY='x4'" in capsys.readouterr().err

@@ -388,3 +388,29 @@ def test_throughput_progress_ledger_is_exactly_once(spark):
         cum += r["input_rows"]
         assert r["cum_input_rows"] == cum
         assert 0 <= r["output_rows"] <= r["input_rows"]
+
+
+def test_throughput_progress_survives_max_records_per_file(spark, tmp_path):
+    """A session with spark.sql.files.maxRecordsPerFile set small
+    splits every residue directory of the batch split into several
+    part files; the one-file fallback must then write each residue as
+    ONE file (its own write lifts the cap) instead of crashing on
+    ``[part] = hits``. The events table is copied to a fresh dir so
+    the scan is built on the clone session, not the memoized one."""
+    import shutil
+
+    from rdbms_scala_spark.catalog import table_path
+    from rdbms_scala_spark.session import session_clone
+    from rdbms_scala_spark.streaming.jobs import (
+        _THROUGHPUT_BATCHES,
+        streaming_throughput_progress,
+    )
+
+    src = "/root/testdata/sf0.001"
+    shutil.copyfile(table_path(src, "events"), table_path(str(tmp_path), "events"))
+    small = session_clone(
+        spark, "max_records_per_file_5", {"spark.sql.files.maxRecordsPerFile": "5"}
+    )
+    rows = streaming_throughput_progress(small, str(tmp_path)).collect()
+    assert len(rows) == _THROUGHPUT_BATCHES
+    assert rows[-1]["cum_input_rows"] == load_table(spark, src, "events").count()
